@@ -89,16 +89,6 @@ object Dedup {
 
   // ----------------------------------------------------------- minhash/LSH
 
-  /** MinHash signature as a pure column-function chain: signature[j] =
-    * min over shingles of hash_j(shingle). Kept as the interpreted
-    * reference form; the pipeline path uses the native MinHashSignature
-    * expression (same shape, one tight loop). */
-  def minhashSignatureHof(text: Column, k: Int = 64, shingleW: Int = 3): Column = {
-    val sh = shingles(text, shingleW)
-    transform(sequence(lit(0), lit(k - 1)),
-      j => array_min(transform(sh, g => xxhash64(g, j))))
-  }
-
   /** MinHash signatures, fully NARROW: one native rolling-hash pass
     * over the tokens, then one native k×|shingles| min loop per row —
     * no explode, no shuffle, no aggregation. The map stage emits

@@ -1265,6 +1265,54 @@ object EventAnalytics {
         sum(col("_b")).as("n_bounces"))
   }
 
+  /** Matrix-row gate of [[markovStepsDriver]]: the stepped state is at
+    * most |variants|·|states| rows, yet the distributed loop is `steps`
+    * chained join+aggregate rounds of scheduled stage-jobs. At 100k
+    * (string, string, decimal) rows the collected matrix is a few MB. */
+  private val MarkovDriverMaxMatrixRows = 100000L
+
+  /** Driver twin of [[markovAttribution]]'s stepped mass propagation:
+    * collect the checkpointed variant-keyed matrix once and run the
+    * IDENTICAL decimal arithmetic in BigDecimal — products of two
+    * scale-12 decimals are exact at scale 24 (Spark: decimal(37,24), no
+    * rounding), sums are exact, then one HALF_UP round to scale 12 per
+    * (variant, state), matching round(sum(m·p), 12)::decimal(18,12)
+    * bit-for-bit (spec-pinned driver == distributed on real data).
+    * Output: (vv, pc), each variant's CONV mass; None over the gate. */
+  private def markovStepsDriver(matrix: DataFrame, variantIds: DataFrame,
+                                steps: Int): Option[DataFrame] = {
+    if (!LocalGate.fits(matrix, MarkovDriverMaxMatrixRows, "markov")) return None
+    val mRows = matrix.collect()
+    val byVi = mRows.groupBy(r => (r.getString(0), r.getString(1)))
+      .map { case (k, rs) =>
+        k -> rs.map(r => (r.getString(2), r.getDecimal(3))).toSeq
+      }
+    var vm: Map[(String, String), java.math.BigDecimal] =
+      variantIds.collect().map(r => (r.getString(0), "_START") ->
+        new java.math.BigDecimal("1.000000000000")).toMap
+    for (_ <- 1 to steps) {
+      val acc = scala.collection.mutable.Map.empty[(String, String), java.math.BigDecimal]
+      for (((vv, st), m) <- vm; (j, p) <- byVi.getOrElse((vv, st), Seq.empty)) {
+        val k = (vv, j)
+        acc(k) = acc.getOrElse(k, java.math.BigDecimal.ZERO).add(m.multiply(p))
+      }
+      vm = acc.map { case (k, s) =>
+        k -> s.setScale(12, java.math.RoundingMode.HALF_UP)
+      }.toMap
+    }
+    val spark = matrix.sparkSession
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("vv",
+        org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("pc",
+        org.apache.spark.sql.types.DataTypes.createDecimalType(18, 12))))
+    val rows = vm.toSeq.collect { case ((vv, "_CONV"), m) =>
+      org.apache.spark.sql.Row(vv, m)
+    }
+    Some(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), schema))
+  }
+
   /** Markov-chain (removal-effect) attribution — the data-driven model
     * that replaces last/multi-touch heuristics (Anderl et al. 2014):
     * user journeys become a first-order chain START → channels →
@@ -1353,53 +1401,7 @@ object EventAnalytics {
       .select(col("_v"), explode(array(lit("_CONV"), lit("_NULL"))).as("i"))
       .select(col("_v"), col("i"), col("i").as("j"), lit(1.0).cast(dec).as("p"))
     val matrix = variants.unionAll(loops).localCheckpoint()
-    // The stepped mass propagation: state is (variant, state, mass) —
-    // at most |variants|·|states| rows, kilobytes for any realistic
-    // channel vocabulary — yet the distributed loop is `steps` chained
-    // join+aggregate rounds whose stage-jobs dominate the row (the
-    // textrank/ktruss scheduling lesson). Size-gated driver iteration
-    // (spark.graft.markov.driverStepsMaxMatrixRows, default 100k;
-    // 0 disables — the distributed parity face): collect the
-    // checkpointed matrix once and run the IDENTICAL decimal
-    // arithmetic in BigDecimal — products of two scale-12 decimals are
-    // exact at scale 24 (Spark: decimal(37,24), no rounding), sums are
-    // exact, then one HALF_UP round to scale 12 per (variant, state),
-    // matching round(sum(m·p), 12)::decimal(18,12) bit-for-bit
-    // (spec-pinned driver == distributed on real data).
-    val driverMax = events.sparkSession.conf
-      .getOption("spark.graft.markov.driverStepsMaxMatrixRows").map(_.toLong)
-      .getOrElse(100000L)
-    val pConv = if (driverMax > 0 && matrix.count() <= driverMax) {
-      val mRows = matrix.collect()
-      val byVi = mRows.groupBy(r => (r.getString(0), r.getString(1)))
-        .map { case (k, rs) =>
-          k -> rs.map(r => (r.getString(2), r.getDecimal(3))).toSeq
-        }
-      var vm: Map[(String, String), java.math.BigDecimal] =
-        variantIds.collect().map(r => (r.getString(0), "_START") ->
-          new java.math.BigDecimal("1.000000000000")).toMap
-      for (_ <- 1 to steps) {
-        val acc = scala.collection.mutable.Map.empty[(String, String), java.math.BigDecimal]
-        for (((vv, st), m) <- vm; (j, p) <- byVi.getOrElse((vv, st), Seq.empty)) {
-          val k = (vv, j)
-          acc(k) = acc.getOrElse(k, java.math.BigDecimal.ZERO).add(m.multiply(p))
-        }
-        vm = acc.map { case (k, s) =>
-          k -> s.setScale(12, java.math.RoundingMode.HALF_UP)
-        }.toMap
-      }
-      val spark = events.sparkSession
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vv",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("pc",
-          org.apache.spark.sql.types.DataTypes.createDecimalType(18, 12))))
-      val rows = vm.toSeq.collect { case ((vv, "_CONV"), m) =>
-        org.apache.spark.sql.Row(vv, m)
-      }
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
-    } else {
+    val pConv = markovStepsDriver(matrix, variantIds, steps).getOrElse {
       // the mass vector carries its variant key under a DIFFERENT name
       // (vv) so the L join-iterations against `matrix` never self-join
       // on a shared attribute id

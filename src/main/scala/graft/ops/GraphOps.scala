@@ -301,24 +301,75 @@ object GraphOps {
                     assumeCanonical: Boolean = false): DataFrame =
     triangleStats(face(edges, srcCol, dstCol, assumeCanonical))
 
-  /** Synchronous label propagation (Raghavan et al. 2007's LPA, made
-    * deterministic): every node starts labeled with its own id; each
-    * round it adopts the label most frequent among its neighbors,
-    * ties broken by SMALLEST label; all nodes update simultaneously
-    * from the previous round's labels (the asynchronous/random-order
-    * variants converge faster but are non-reproducible — a
-    * deterministic engine can't ship them). Runs a FIXED `iters`
-    * rounds; the per-round label table is localCheckpointed so plan
-    * depth and lineage stay O(1) per round.
-    *
-    * Per round: one join of the pre-partitioned symmetrized edge list
-    * ([[GraphFace.sym]] — the label side alone exchanges, node-sized)
-    * against the label table, a (node, label) count, and a max-struct
-    * argmax — max(struct(cnt, −label)) picks highest count then
-    * lowest label without a per-node sort window.
-    *
-    * Output: (node, label) for every node of the canonicalized graph.
-    */
+  // ------------------------------------------------------ driver twins
+
+  /** Edge-count gate of the driver twins of the iterated graph
+    * operators (LPA, BFS, k-core, k-truss): graphs whose CANONICAL edge
+    * table is at or under this many rows collect once (≤ ~32 MB of id
+    * pairs) and iterate in exact integer arithmetic on the driver — the
+    * per-round state of these operators is node- or trajectory-sized,
+    * and at gate-sized graphs the distributed rounds are almost pure
+    * stage-job scheduling (the textrank/ktruss r14 lesson). Results are
+    * identical either way — each operator is a pure integer function of
+    * the edge set (spec-pinned equality per operator). */
+  private val DriverMaxEdges = 2000000L
+
+  /** Triangle cap of the k-truss driver twin: the edge gate does not
+    * bound triangle count (a ~2000-node near-clique under it has ~1.3e9
+    * triangles), so enumeration falls through to the spilling
+    * distributed peel past this many (flat int storage, ~12 B per
+    * triangle: ~360 MB transient). */
+  private val DriverMaxTriangles = 30000000L
+
+  /** Long or int: the node types the graph twins rebuild exactly. */
+  private def integralNodeType(dt: org.apache.spark.sql.types.DataType): Boolean =
+    dt == org.apache.spark.sql.types.LongType ||
+      dt == org.apache.spark.sql.types.IntegerType
+
+  /** A graph under the driver gate, collected once and indexed for the
+    * graph twins: node index in first-seen order over the canonical
+    * edges, ids by index, degrees, and the symmetric CSR adjacency
+    * (node i's neighbors are `nbr(off(i) until off(i + 1))`). */
+  private final class LocalGraph(val edges: Array[(Long, Long)]) {
+    val idx = new scala.collection.mutable.LongMap[Int]()
+    edges.foreach { case (a, b) =>
+      if (!idx.contains(a)) idx(a) = idx.size
+      if (!idx.contains(b)) idx(b) = idx.size
+    }
+    val n: Int = idx.size
+    val ids = new Array[Long](n)
+    idx.foreach { case (id, i) => ids(i) = id }
+    val deg = new Array[Int](n)
+    edges.foreach { case (a, b) => deg(idx(a)) += 1; deg(idx(b)) += 1 }
+    val off = new Array[Int](n + 1)
+    for (i <- 0 until n) off(i + 1) = off(i) + deg(i)
+    val nbr: Array[Int] = {
+      val out = new Array[Int](2 * edges.length)
+      val fill = java.util.Arrays.copyOf(off, n)
+      edges.foreach { case (a, b) =>
+        val ia = idx(a); val ib = idx(b)
+        out(fill(ia)) = ib; fill(ia) += 1
+        out(fill(ib)) = ia; fill(ib) += 1
+      }
+      out
+    }
+  }
+
+  /** The face's graph on the driver, or None — run the distributed
+    * path — when the canonical edge table is over [[DriverMaxEdges]] or
+    * an endpoint column is not integral: the twins cast ids to long
+    * and must emit the distributed path's schema, and string ids would
+    * cast to NULL and read back as 0, double/decimal ids truncate —
+    * collapsing distinct nodes. */
+  private def localGraph(f: GraphFace): Option[LocalGraph] = {
+    val s = f.canonical.schema
+    if (s.length >= 2 && integralNodeType(s(0).dataType) && integralNodeType(s(1).dataType) &&
+        LocalGate.fits(f.canonical, DriverMaxEdges, "graph"))
+      Some(new LocalGraph(f.canonical.select(col("a").cast("long"), col("b").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))))
+    else None
+  }
+
   /** The shared argmax: most-frequent label per node from (nodeCol,
     * label) rows, ties to the SMALLEST label. Two codegen'd hash
     * aggregates by default; `useMode` collapses them into one
@@ -342,75 +393,67 @@ object GraphOps {
     * stops early when a round changes nothing (identical output — the
     * remaining rounds are no-ops, same as the distributed
     * converged exit). */
-  private def lpaDriver(f: GraphFace, iters: Int): Option[DataFrame] = {
-    val nodeType = f.canonical.schema.head.dataType
-    if (!integralNodeType(nodeType)) return None
-    val edges = collectCanonical(f)
-    val idx = new scala.collection.mutable.LongMap[Int]()
-    edges.foreach { case (a, b) =>
-      if (!idx.contains(a)) idx(a) = idx.size
-      if (!idx.contains(b)) idx(b) = idx.size
-    }
-    val n = idx.size
-    val ids = new Array[Long](n)
-    idx.foreach { case (id, i) => ids(i) = id }
-    val degArr = new Array[Int](n)
-    edges.foreach { case (a, b) => degArr(idx(a)) += 1; degArr(idx(b)) += 1 }
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + degArr(i); i += 1 }
-    val nbr = new Array[Int](2 * edges.length)
-    val fill = java.util.Arrays.copyOf(off, n)
-    edges.foreach { case (a, b) =>
-      val ia = idx(a); val ib = idx(b)
-      nbr(fill(ia)) = ib; fill(ia) += 1
-      nbr(fill(ib)) = ia; fill(ib) += 1
-    }
-    var labels: Array[Long] = ids.clone()
-    var converged = false
-    for (_ <- 1 to iters if !converged) {
-      val next = new Array[Long](n)
-      val counts = new scala.collection.mutable.LongMap[Long]()
-      var changedAny = false
-      i = 0
-      while (i < n) {
-        counts.clear()
-        var j = off(i)
-        while (j < off(i + 1)) {
-          val l = labels(nbr(j))
-          counts(l) = counts.getOrElse(l, 0L) + 1L
-          j += 1
-        }
-        var bestLabel = Long.MaxValue; var bestCount = -1L
-        counts.foreach { case (l, c) =>
-          if (c > bestCount || (c == bestCount && l < bestLabel)) {
-            bestCount = c; bestLabel = l
+  private def lpaDriver(f: GraphFace, iters: Int): Option[DataFrame] =
+    localGraph(f).map { g =>
+      import g.{ids, n, nbr, off}
+      var labels: Array[Long] = ids.clone()
+      var converged = false
+      for (_ <- 1 to iters if !converged) {
+        val next = new Array[Long](n)
+        val counts = new scala.collection.mutable.LongMap[Long]()
+        var changedAny = false
+        var i = 0
+        while (i < n) {
+          counts.clear()
+          var j = off(i)
+          while (j < off(i + 1)) {
+            val l = labels(nbr(j))
+            counts(l) = counts.getOrElse(l, 0L) + 1L
+            j += 1
           }
+          var bestLabel = Long.MaxValue; var bestCount = -1L
+          counts.foreach { case (l, c) =>
+            if (c > bestCount || (c == bestCount && l < bestLabel)) {
+              bestCount = c; bestLabel = l
+            }
+          }
+          next(i) = bestLabel
+          if (bestLabel != labels(i)) changedAny = true
+          i += 1
         }
-        next(i) = bestLabel
-        if (bestLabel != labels(i)) changedAny = true
-        i += 1
+        labels = next
+        converged = !changedAny
       }
-      labels = next
-      converged = !changedAny
-    }
-    val spark = f.spark
-    import spark.implicits._
-    val out =
-      if (nodeType == org.apache.spark.sql.types.LongType)
+      val spark = f.spark
+      import spark.implicits._
+      if (f.canonical.schema.head.dataType == org.apache.spark.sql.types.LongType)
         (0 until n).map(i => (ids(i), labels(i))).toDF("node", "label")
       else
         (0 until n).map(i => (ids(i).toInt, labels(i).toInt)).toDF("node", "label")
-    Some(out)
-  }
+    }
 
+  /** Synchronous label propagation (Raghavan et al. 2007's LPA, made
+    * deterministic): every node starts labeled with its own id; each
+    * round it adopts the label most frequent among its neighbors,
+    * ties broken by SMALLEST label; all nodes update simultaneously
+    * from the previous round's labels (the asynchronous/random-order
+    * variants converge faster but are non-reproducible — a
+    * deterministic engine can't ship them). Runs a FIXED `iters`
+    * rounds; the per-round label table is localCheckpointed so plan
+    * depth and lineage stay O(1) per round.
+    *
+    * Per round: one join of the pre-partitioned symmetrized edge list
+    * ([[GraphFace.sym]] — the label side alone exchanges, node-sized)
+    * against the label table, a (node, label) count, and a max-struct
+    * argmax — max(struct(cnt, −label)) picks highest count then
+    * lowest label without a per-node sort window.
+    *
+    * Output: (node, label) for every node of the canonicalized graph.
+    */
   def labelPropagation(f: GraphFace, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 20, s"labelPropagation: iters must be in [1, 20], got $iters")
-    val driverMax = driverMaxEdges(f)
-    if (driverMax > 0 && f.canonical.count() <= driverMax) {
-      val d = lpaDriver(f, iters)
-      if (d.isDefined) return d.get
-    }
+    val local = lpaDriver(f, iters)
+    if (local.isDefined) return local.get
     val useMode = f.spark.conf.getOption("spark.graft.lpa.modeAgg").exists(_.toBoolean)
     // ADAPTIVE frontier rounds: a node's round-r label depends only on
     // its neighbors' round-(r−1) labels, so a node NONE of whose
@@ -533,6 +576,44 @@ object GraphOps {
                        assumeCanonical: Boolean = false): DataFrame =
     labelPropagation(face(edges, srcCol, dstCol, assumeCanonical), iters)
 
+  /** BFS on the driver — exact twin of the frontier rounds below:
+    * hop 0 = the distinct seed set (including seeds with no edges),
+    * hop r = unvisited neighbors of the previous frontier. */
+  private def bfsHopsDriver(f: GraphFace, seeds: DataFrame, seedCol: String,
+                            rounds: Int): Option[DataFrame] = {
+    val seedDf = seeds.select(col(seedCol).as("node")).distinct()
+    val nodeType = seedDf.schema.head.dataType
+    if (!integralNodeType(nodeType) || f.canonical.schema.head.dataType != nodeType) return None
+    localGraph(f).map { g =>
+      // a NULL seed survives distinct() as one row; in the distributed
+      // path it is an inert (NULL, 0) row (NULL never equi-joins sym) —
+      // mirror that here instead of letting getLong read NULL as node 0
+      val seedRows = seedDf.select(col("node").cast("long")).collect()
+      val nullSeed = seedRows.exists(_.isNullAt(0))
+      val dist = new scala.collection.mutable.LongMap[Int]()
+      var frontier = seedRows.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSeq
+      frontier.foreach(s => dist(s) = 0)
+      for (r <- 1 to rounds) {
+        val next = scala.collection.mutable.ArrayBuffer.empty[Long]
+        frontier.foreach { u =>
+          g.idx.get(u).foreach { i =>
+            for (j <- g.off(i) until g.off(i + 1)) {
+              val v = g.ids(g.nbr(j))
+              if (!dist.contains(v)) { dist(v) = r; next += v }
+            }
+          }
+        }
+        frontier = next.toSeq
+      }
+      val spark = f.spark
+      import spark.implicits._
+      val rows = dist.toSeq.map { case (n, h) => (Option(n), h) } ++
+        (if (nullSeed) Seq((Option.empty[Long], 0)) else Nil)
+      if (nodeType == org.apache.spark.sql.types.LongType) rows.toDF("node", "hop")
+      else rows.map { case (n, h) => (n.map(_.toInt), h) }.toDF("node", "hop")
+    }
+  }
+
   /** Multi-source BFS hop distance, fixed `rounds`: every seed starts
     * at hop 0; round r labels every still-unlabeled neighbor of the
     * round-(r−1) frontier with hop r. The result is the exact
@@ -554,80 +635,10 @@ object GraphOps {
     * lineage).
     *
     * Output: (node, hop), one row per reached node. */
-  /** Long-or-int node column support for the driver graph paths: the
-    * driver twins must emit the SAME schema the distributed path
-    * would, so they only engage for integral node types and rebuild
-    * typed local relations; anything else stays distributed. */
-  private def integralNodeType(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt == org.apache.spark.sql.types.LongType ||
-      dt == org.apache.spark.sql.types.IntegerType
-
-  /** Both endpoint columns of the canonical edge table are integral —
-    * the precondition for EVERY driver graph twin: collectCanonical
-    * casts node ids to long, so a non-integral node column (string ids
-    * cast to NULL and read back as 0, double/decimal ids truncate)
-    * would silently collapse distinct nodes. Non-integral graphs stay
-    * on the type-generic distributed paths. */
-  private def integralEndpoints(f: GraphFace): Boolean = {
-    val s = f.canonical.schema
-    s.length >= 2 && integralNodeType(s(0).dataType) && integralNodeType(s(1).dataType)
-  }
-
-  /** BFS on the driver — exact twin of the frontier rounds below:
-    * hop 0 = the distinct seed set (including seeds with no edges),
-    * hop r = unvisited neighbors of the previous frontier. */
-  private def bfsHopsDriver(f: GraphFace, seeds: DataFrame, seedCol: String,
-                            rounds: Int): Option[DataFrame] = {
-    val seedDf = seeds.select(col(seedCol).as("node")).distinct()
-    val nodeType = seedDf.schema.head.dataType
-    if (!integralNodeType(nodeType) || !integralEndpoints(f) ||
-        f.canonical.schema.head.dataType != nodeType) return None
-    // a NULL seed survives distinct() as one row; in the distributed
-    // path it is an inert (NULL, 0) row (NULL never equi-joins sym) —
-    // mirror that here instead of letting getLong read NULL as node 0
-    val seedRows = seedDf.select(col("node").cast("long")).collect()
-    val nullSeed = seedRows.exists(_.isNullAt(0))
-    val seedVals = seedRows.filterNot(_.isNullAt(0)).map(_.getLong(0))
-    val edges = collectCanonical(f)
-    val adjacency = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]()
-    edges.foreach { case (a, b) =>
-      adjacency.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-      adjacency.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
-    }
-    val dist = new scala.collection.mutable.LongMap[Int]()
-    var frontier = seedVals.toSeq
-    frontier.foreach(s => dist(s) = 0)
-    for (r <- 1 to rounds) {
-      val next = scala.collection.mutable.ArrayBuffer.empty[Long]
-      frontier.foreach { u =>
-        adjacency.get(u).foreach(_.foreach { v =>
-          if (!dist.contains(v)) { dist(v) = r; next += v }
-        })
-      }
-      frontier = next.toSeq
-    }
-    val spark = f.spark
-    import spark.implicits._
-    val out =
-      if (nodeType == org.apache.spark.sql.types.LongType) {
-        val rows = dist.toSeq.map { case (n, h) => (Option(n), h) } ++
-          (if (nullSeed) Seq((Option.empty[Long], 0)) else Nil)
-        rows.toDF("node", "hop")
-      } else {
-        val rows = dist.toSeq.map { case (n, h) => (Option(n.toInt), h) } ++
-          (if (nullSeed) Seq((Option.empty[Int], 0)) else Nil)
-        rows.toDF("node", "hop")
-      }
-    Some(out)
-  }
-
   def bfsHops(f: GraphFace, seeds: DataFrame, seedCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"bfsHops: rounds must be in [1, 20], got $rounds")
-    val driverMax = driverMaxEdges(f)
-    if (driverMax > 0 && f.canonical.count() <= driverMax) {
-      val d = bfsHopsDriver(f, seeds, seedCol, rounds)
-      if (d.isDefined) return d.get
-    }
+    val local = bfsHopsDriver(f, seeds, seedCol, rounds)
+    if (local.isDefined) return local.get
     // only each round's FRONTIER is materialized; the visited set is
     // the union of the already-checkpointed round tables (O(rounds)
     // plan width, zero recompute) — re-materializing the whole
@@ -654,6 +665,49 @@ object GraphOps {
               rounds: Int = 3, assumeCanonical: Boolean = false): DataFrame =
     bfsHops(face(edges, srcCol, dstCol, assumeCanonical), seeds, seedCol, rounds)
 
+  /** The k-core peel on the driver — the exact integer twin of the
+    * distributed round below: same per-round removed set (deg < k over
+    * the CURRENT survivors), same loss accounting (each removed node
+    * decrements its surviving neighbors once per incident edge), same
+    * deg > 0 survival filter, same (n_nodes, Σdeg/2) trajectory row. */
+  private def kcoreLoopDriver(f: GraphFace, k: Int, maxRounds: Int, stopWhenStable: Boolean)
+      : Option[(Seq[(Int, Long, Long)], Boolean, Int)] =
+    localGraph(f).map { g =>
+      import g.{n, nbr, off}
+      val alive = new Array[Boolean](n); java.util.Arrays.fill(alive, true)
+      val deg = g.deg.map(_.toLong)
+      val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
+      var prev: Option[(Long, Long)] = None
+      var stable = false
+      var r = 0
+      while (r < maxRounds && !(stopWhenStable && stable)) {
+        r += 1
+        val removed = (0 until n).filter(v => alive(v) && deg(v) < k)
+        removed.foreach { v => alive(v) = false }
+        removed.foreach { v =>
+          var j = off(v)
+          while (j < off(v + 1)) {
+            val w = nbr(j)
+            if (alive(w)) deg(w) -= 1
+            j += 1
+          }
+        }
+        var nn = 0L; var s = 0L
+        var i = 0
+        while (i < n) {
+          if (alive(i)) {
+            if (deg(i) > 0) { nn += 1; s += deg(i) } else alive(i) = false
+          }
+          i += 1
+        }
+        val cur = (nn, s / 2)
+        buf += ((r, nn, s / 2))
+        stable = prev.contains(cur)
+        prev = Some(cur)
+      }
+      (buf.toSeq, stable, r)
+    }
+
   /** The k-core peel loop shared by [[kcorePeel]] (fixed rounds) and
     * [[kcoreFixpoint]] (run to stability): INCREMENTAL degree
     * maintenance. Each round removes every node currently below `k`
@@ -676,95 +730,10 @@ object GraphOps {
     * The trajectory is row-for-row identical to the old
     * recompute-from-edges loop — both compute degrees of the induced
     * surviving subgraph; only the maintenance is incremental. */
-  /** Edge-count gate for the driver-iterated graph operators (k-core,
-    * k-truss, BFS, LPA): graphs whose CANONICAL edge table is at or
-    * under this many rows collect once (≤ ~32 MB of id pairs at the
-    * default) and iterate in exact integer arithmetic on the driver —
-    * the per-round state of these operators is node- or
-    * trajectory-sized, and at gate-sized graphs the distributed
-    * rounds are almost pure stage-job scheduling (the textrank/ktruss
-    * r14 lesson). 0 disables (the distributed parity face); results
-    * are identical either way — each operator is a pure integer
-    * function of the edge set (spec-pinned equality per operator).
-    * Conf `spark.graft.graph.driverMaxEdges`; the transitional r15
-    * name `…driverPeelMaxEdges` is honored when the new one is
-    * unset. */
-  private def driverMaxEdges(f: GraphFace): Long = f.spark.conf
-    .getOption("spark.graft.graph.driverMaxEdges")
-    .orElse(f.spark.conf.getOption("spark.graft.graph.driverPeelMaxEdges"))
-    .map(_.toLong)
-    .getOrElse(2000000L)
-
-  /** Collected canonical edges as id pairs (lossless long casts). */
-  private def collectCanonical(f: GraphFace): Array[(Long, Long)] =
-    f.canonical.select(col("a").cast("long"), col("b").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-
-  /** The k-core peel on the driver — the exact integer twin of the
-    * distributed round below: same per-round removed set (deg < k over
-    * the CURRENT survivors), same loss accounting (each removed node
-    * decrements its surviving neighbors once per incident edge), same
-    * deg > 0 survival filter, same (n_nodes, Σdeg/2) trajectory row. */
-  private def kcoreLoopDriver(edges: Array[(Long, Long)], k: Int, maxRounds: Int,
-                              stopWhenStable: Boolean): (Seq[(Int, Long, Long)], Boolean, Int) = {
-    // index nodes; CSR adjacency over both directions
-    val idx = new scala.collection.mutable.LongMap[Int]()
-    edges.foreach { case (a, b) =>
-      if (!idx.contains(a)) idx(a) = idx.size
-      if (!idx.contains(b)) idx(b) = idx.size
-    }
-    val n = idx.size
-    val degArr = new Array[Long](n)
-    edges.foreach { case (a, b) => degArr(idx(a)) += 1; degArr(idx(b)) += 1 }
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + degArr(i).toInt; i += 1 }
-    val nbr = new Array[Int](2 * edges.length)
-    val fill = java.util.Arrays.copyOf(off, n)
-    edges.foreach { case (a, b) =>
-      val ia = idx(a); val ib = idx(b)
-      nbr(fill(ia)) = ib; fill(ia) += 1
-      nbr(fill(ib)) = ia; fill(ib) += 1
-    }
-    val alive = new Array[Boolean](n); java.util.Arrays.fill(alive, true)
-    val deg = degArr.clone()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-    var prev: Option[(Long, Long)] = None
-    var stable = false
-    var r = 0
-    while (r < maxRounds && !(stopWhenStable && stable)) {
-      r += 1
-      val removed = (0 until n).filter(v => alive(v) && deg(v) < k)
-      removed.foreach { v => alive(v) = false }
-      removed.foreach { v =>
-        var j = off(v)
-        while (j < off(v + 1)) {
-          val w = nbr(j)
-          if (alive(w)) deg(w) -= 1
-          j += 1
-        }
-      }
-      var nn = 0L; var s = 0L
-      i = 0
-      while (i < n) {
-        if (alive(i)) {
-          if (deg(i) > 0) { nn += 1; s += deg(i) } else alive(i) = false
-        }
-        i += 1
-      }
-      val cur = (nn, s / 2)
-      buf += ((r, nn, s / 2))
-      stable = prev.contains(cur)
-      prev = Some(cur)
-    }
-    (buf.toSeq, stable, r)
-  }
-
   private def kcoreLoop(f: GraphFace, k: Int, maxRounds: Int,
                         stopWhenStable: Boolean): (Seq[(Int, Long, Long)], Boolean, Int) = {
-    val driverMax = driverMaxEdges(f)
-    if (driverMax > 0 && integralEndpoints(f) && f.canonical.count() <= driverMax)
-      return kcoreLoopDriver(collectCanonical(f), k, maxRounds, stopWhenStable)
+    val local = kcoreLoopDriver(f, k, maxRounds, stopWhenStable)
+    if (local.isDefined) return local.get
     var deg = f.deg
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     var prev: Option[(Long, Long)] = None
@@ -845,32 +814,6 @@ object GraphOps {
                     assumeCanonical: Boolean = false): (DataFrame, Int) =
     kcoreFixpoint(face(edges, srcCol, dstCol, assumeCanonical), k, maxRounds)
 
-  /** k-truss peeling trajectory — the EDGE-strength sibling of
-    * [[kcorePeel]] (Cohen 2008): each round computes every edge's
-    * triangle support and deletes edges supported by fewer than k−2
-    * triangles; what survives all rounds is tending to the k-truss,
-    * the standard cohesive-subgraph definition one notch stronger than
-    * the k-core (every surviving relationship is REINFORCED by ≥ k−2
-    * common neighbors, not merely incident to a busy node).
-    *
-    * Triangles are enumerated ONCE, on the initial graph — the shared
-    * [[GraphFace.triples]] face (a workload that also ran
-    * [[triangleStats]] has the orientation + adjacency builds already
-    * paid) — edge deletion can never CREATE a triangle, so every later
-    * round's triangle set is exactly the alive subset (all three edges
-    * surviving), maintained by three composite-key semi-joins per
-    * round instead of a re-enumeration (the re-enumerating variant
-    * measured 53.2 vs 27.1 s at sf1 — the co-occurrence graph keeps
-    * ~40% of its edges through the peel, so a re-enumeration repays
-    * most of the round-1 cost every round while the semi-joins only
-    * shuffle shrinking id triples; deletion can't create triangles, so
-    * both shapes are exact). Edge/support/triple tables are
-    * localCheckpointed per round (the kcore bounded-lineage
-    * discipline); n_triangles falls out of the support sum (Σsup = 3Δ)
-    * with no extra pass.
-    *
-    * Output: one row per round — (round, n_edges entering the round,
-    * n_triangles on that edge set, n_removed by the round's peel). */
   /** The k-truss peel on the driver — the exact integer twin of the
     * distributed rounds below. Triangles are enumerated once on the
     * initial graph via the same compact-forward orientation the face
@@ -879,28 +822,17 @@ object GraphOps {
     * the alive triples, removes sup < k−2 edges, and kills triples
     * with a dead edge — the identical trajectory algebra
     * ((round, entering edges, Σsup/3 = alive triples, removed)). */
-  private def ktrussPeelDriver(edges: Array[(Long, Long)], k: Int, rounds: Int,
+  private def ktrussPeelDriver(g: LocalGraph, k: Int, rounds: Int,
                                maxTriangles: Long): Option[Seq[(Int, Long, Long, Long)]] = {
-    val idx = new scala.collection.mutable.LongMap[Int]()
-    edges.foreach { case (a, b) =>
-      if (!idx.contains(a)) idx(a) = idx.size
-      if (!idx.contains(b)) idx(b) = idx.size
-    }
-    val n = idx.size
-    val ids = new Array[Long](n)
-    idx.foreach { case (id, i) => ids(i) = id }
-    val degArr = new Array[Int](n)
-    edges.foreach { case (a, b) => degArr(idx(a)) += 1; degArr(idx(b)) += 1 }
+    import g.{edges, idx, ids, n}
+    val degArr = g.deg
     // edge index by endpoint pair (a < b by original id), keyed on the
     // two PACKED node indices (each < n ≤ 2·edges, always an Int) —
     // one primitive LongMap entry per edge, no boxed tuple keys
     val eIdx = new scala.collection.mutable.LongMap[Int](edges.length * 2)
     @inline def eKey(loId: Long, hiId: Long): Long =
       (idx(loId).toLong << 32) | (idx(hiId).toLong & 0xffffffffL)
-    var i = 0
-    while (i < edges.length) {
-      eIdx(eKey(edges(i)._1, edges(i)._2)) = i; i += 1
-    }
+    for (i <- edges.indices) eIdx(eKey(edges(i)._1, edges(i)._2)) = i
     // compact-forward orientation: lower (deg, id) endpoint → other;
     // out-lists sorted by ORIGINAL id for the two-pointer intersect
     val outDeg = new Array[Int](n)
@@ -910,8 +842,7 @@ object GraphOps {
       outDeg(if (aLow) ia else ib) += 1
     }
     val oOff = new Array[Int](n + 1)
-    i = 0
-    while (i < n) { oOff(i + 1) = oOff(i) + outDeg(i); i += 1 }
+    for (i <- 0 until n) oOff(i + 1) = oOff(i) + outDeg(i)
     val oNbr = new Array[Long](edges.length)
     val oFill = java.util.Arrays.copyOf(oOff, n)
     edges.foreach { case (a, b) =>
@@ -921,18 +852,14 @@ object GraphOps {
       oNbr(oFill(s)) = if (aLow) b else a
       oFill(s) += 1
     }
-    i = 0
-    while (i < n) {
-      java.util.Arrays.sort(oNbr, oOff(i), oOff(i + 1)); i += 1
-    }
+    for (i <- 0 until n) java.util.Arrays.sort(oNbr, oOff(i), oOff(i + 1))
     // one (e1, e2, e3) row per triangle, as edge indices in a FLAT
     // primitive int array (3 slots per triangle) — the boxed-tuple
     // buffer was O(#triangles) of tuple objects, which a dense
     // sub-2M-edge graph can blow past the heap with. The same density
-    // hazard motivates the maxTriangles bail-out: the edge GATE bounds
-    // edge count, not triangle count (a ~2000-node near-clique under
-    // the gate has ~1.3e9 triangles), so enumeration aborts to the
-    // spilling distributed peel once the cap is crossed.
+    // hazard motivates the maxTriangles bail-out ([[DriverMaxTriangles]]):
+    // enumeration aborts to the spilling distributed peel once the cap
+    // is crossed.
     val trisB = new scala.collection.mutable.ArrayBuilder.ofInt
     var nTris = 0L
     var aborted = false
@@ -983,7 +910,7 @@ object GraphOps {
         t += 1
       }
       var kept = 0L
-      i = 0
+      var i = 0
       while (i < edges.length) {
         if (eAlive(i) && sup(i) >= (k - 2).toLong) kept += 1
         i += 1
@@ -1010,28 +937,43 @@ object GraphOps {
     Some(buf.toSeq)
   }
 
-  def ktrussPeel(f: GraphFace, k: Int, rounds: Int): DataFrame = {
+  /** k-truss peeling trajectory — the EDGE-strength sibling of
+    * [[kcorePeel]] (Cohen 2008): each round computes every edge's
+    * triangle support and deletes edges supported by fewer than k−2
+    * triangles; what survives all rounds is tending to the k-truss,
+    * the standard cohesive-subgraph definition one notch stronger than
+    * the k-core (every surviving relationship is REINFORCED by ≥ k−2
+    * common neighbors, not merely incident to a busy node).
+    *
+    * Triangles are enumerated ONCE, on the initial graph — the shared
+    * [[GraphFace.triples]] face (a workload that also ran
+    * [[triangleStats]] has the orientation + adjacency builds already
+    * paid) — edge deletion can never CREATE a triangle, so every later
+    * round's triangle set is exactly the alive subset (all three edges
+    * surviving), maintained by three composite-key semi-joins per
+    * round instead of a re-enumeration (the re-enumerating variant
+    * measured 53.2 vs 27.1 s at sf1 — the co-occurrence graph keeps
+    * ~40% of its edges through the peel, so a re-enumeration repays
+    * most of the round-1 cost every round while the semi-joins only
+    * shuffle shrinking id triples; deletion can't create triangles, so
+    * both shapes are exact). Edge/support/triple tables are
+    * localCheckpointed per round (the kcore bounded-lineage
+    * discipline); n_triangles falls out of the support sum (Σsup = 3Δ)
+    * with no extra pass.
+    *
+    * Output: one row per round — (round, n_edges entering the round,
+    * n_triangles on that edge set, n_removed by the round's peel). */
+  def ktrussPeel(f: GraphFace, k: Int, rounds: Int): DataFrame =
+    ktrussPeel(f, k, rounds, DriverMaxTriangles)
+
+  /** [[ktrussPeel]] with the driver twin's triangle cap as an argument
+    * (a spec lowers it to cross the cap on a small graph). */
+  private[ops] def ktrussPeel(f: GraphFace, k: Int, rounds: Int,
+                              maxTriangles: Long): DataFrame = {
     require(k >= 3, s"ktrussPeel: k must be >= 3, got $k")
     require(rounds >= 1 && rounds <= 10, s"ktrussPeel: rounds must be in [1, 10], got $rounds")
-    val driverMax = driverMaxEdges(f)
-    if (driverMax > 0 && integralEndpoints(f) && f.canonical.count() <= driverMax) {
-      // the edge gate does not bound triangle count, so the driver
-      // twin additionally caps enumerated triangles (flat int storage,
-      // ~12 B/triangle: the 30M default is ~360 MB transient) and
-      // falls through to the spilling distributed peel past the cap
-      val maxTris = f.spark.conf
-        .getOption("spark.graft.graph.driverMaxTriangles")
-        .map(_.toLong).getOrElse(30000000L)
-      ktrussPeelDriver(collectCanonical(f), k, rounds, maxTris) match {
-        case Some(buf) =>
-          val spark = f.spark
-          import spark.implicits._
-          return buf.toDF("round", "n_edges", "n_triangles", "n_removed")
-            .select(col("round").cast("int").as("round"), col("n_edges"),
-              col("n_triangles"), col("n_removed"))
-        case None => // triangle cap crossed — distributed peel below
-      }
-    }
+    val local = localGraph(f).flatMap(ktrussPeelDriver(_, k, rounds, maxTriangles))
+    if (local.isDefined) return ktrussTrajectory(f, local.get)
     // Per-round checkpoints are SIZE-GATED between the two materialization
     // modes (the r13/r14 adjudication): AQE-off (partitioning-preserving,
     // fixed partition count) only once the round's edge table is large
@@ -1094,9 +1036,13 @@ object GraphOps {
             Seq("tb", "tc"), "left_semi"))
       }
     }
+    ktrussTrajectory(f, buf.toSeq)
+  }
+
+  private def ktrussTrajectory(f: GraphFace, rows: Seq[(Int, Long, Long, Long)]): DataFrame = {
     val spark = f.spark
     import spark.implicits._
-    buf.toSeq.toDF("round", "n_edges", "n_triangles", "n_removed")
+    rows.toDF("round", "n_edges", "n_triangles", "n_removed")
       .select(col("round").cast("int").as("round"), col("n_edges"),
         col("n_triangles"), col("n_removed"))
   }

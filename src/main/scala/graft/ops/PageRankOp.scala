@@ -61,20 +61,23 @@ object PageRankOp {
     org.apache.spark.sql.graftext.GraftPins.withAqeOff(df.sparkSession)(
       df.localCheckpoint())
 
+  /** Gates of the tiny driver path ([[Graph]]). The edge gate is the
+    * binding ≈32 MB collect and state bound: the sf1 purchase graph at
+    * 5.9M edges stays on the engine. The r15 gate A/B raised the node
+    * gate from 10k after the 16k-node/587k-edge purchase graph
+    * measured 32–36% faster on the driver path. */
+  private val TinyGraphMaxNodes = 200000L
+  private val TinyGraphMaxEdges = 2000000L
+
   /** The materialized graph tables every iteration reads (see
     * [[pageRank]]'s checkpoint rationale) plus the derived scalars.
     * `e` is partitioned on `_dst` when `broadcastRounds` (the rollup
     * key), on `_src` otherwise (the contribution-join key).
     *
-    * `tiny` (node count ≤ `spark.graft.pagerank.tinyGraphMaxNodes`,
-    * default 200k, AND edge count ≤ `…tinyGraphMaxEdges`, default 2M
-    * — the EDGE gate is the binding ≈32 MB collect/state bound; the
-    * r15 gate A/B raised the node default from a conservative 10k
-    * after the 16k-node/587k-edge purchase graph measured 32–36%
-    * faster on the driver path, while its sf1 twin at 5.9M edges
-    * stays on the engine via the edge gate)
-    * marks graphs where the round machinery itself IS the bill: every
-    * per-round broadcast collect and checkpoint is a scheduled job,
+    * `tiny` (node count ≤ [[TinyGraphMaxNodes]] AND edge count ≤
+    * [[TinyGraphMaxEdges]]) marks graphs where the round machinery
+    * itself IS the bill: every per-round broadcast collect and
+    * checkpoint is a scheduled job,
     * and on a vocabulary-sized graph (x_textrank's word graph is 31
     * nodes at sf0.1) ~9 tiny jobs cost ~1.2 s while the actual rank
     * flow costs microseconds — the ktruss scheduling-bound lesson,
@@ -147,21 +150,15 @@ object PageRankOp {
     // first materialization is _dst-partitioned — the broadcast-round
     // layout, and the common case; the rare huge-graph path pays one
     // extra repartition below (amortized over every round)
-    val tinyMaxNodes = spark.conf
-      .getOption("spark.graft.pagerank.tinyGraphMaxNodes").map(_.toLong)
-      .getOrElse(200000L)
-    val tinyMaxEdges = spark.conf
-      .getOption("spark.graft.pagerank.tinyGraphMaxEdges").map(_.toLong)
-      .getOrElse(2000000L)
     val e0 = ck(edges
       .select(col(src).cast("long").as("_src"), col(dst).cast("long").as("_dst"))
       .repartition(col("_dst")))
     val nodes = ck(e0.select(col("_src").as("node"))
       .union(e0.select(col("_dst").as("node"))).distinct())
     val nN: Long = nodes.count() // driver scalar: node count only
-    // the edge-count job (cheap — e0 is checkpointed) is only paid by
+    // the edge probe (cheap — e0 is checkpointed) is only paid by
     // tiny-gate CANDIDATES; big graphs never see it
-    val tiny = nN <= tinyMaxNodes && e0.count() <= tinyMaxEdges
+    val tiny = nN <= TinyGraphMaxNodes && LocalGate.fits(e0, TinyGraphMaxEdges, "pagerank")
     // tiny graphs never read the degree table as a DataFrame (the
     // driver derives degrees from the collected edges)
     val degRaw = e0.groupBy(col("_src")).agg(count(lit(1)).as("_deg"))

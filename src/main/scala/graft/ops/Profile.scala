@@ -262,46 +262,38 @@ object Profile {
       .getOption("spark.graft.spearman.fused").contains("true")
     def ix(c: String): Column =
       round(col(c) * pow(lit(10), lit(scale))).cast("long")
-    // r16 size-gated driver tiny path (the textrank/peel discipline —
-    // OPTIMIZATION_r15 "Not yet" #1): at gate size the per-column shape
-    // is ~15 tiny scheduled jobs around microseconds of integer rank
-    // arithmetic (sf0.1 floor 2.76 s ≈ sf1 floor 2.84 s at 10× data),
-    // so inputs whose KEYED table is at or under
-    // spark.graft.spearman.driverMaxRows (1M — ≈24 MB of id-free longs,
-    // the graph-gate collect bound; 0 disables) collect once and rank
-    // on the driver in the IDENTICAL exact integer arithmetic
-    // (spec-pinned driver == distributed, and the gate guarantees the
-    // Long moment sums can't overflow: Σr² ≤ 4n³ < 2⁶³ at n ≤ 1M). Any
-    // NULL keyed value falls back to the distributed path (whose inner
-    // rank joins drop such rows) rather than re-deriving that
-    // semantics. At 100 TB the distributed two-phase shape is the plan.
-    val driverMax = df.sparkSession.conf
-      .getOption("spark.graft.spearman.driverMaxRows").map(_.toLong)
-      .getOrElse(1000000L)
-    if (!fused && driverMax > 0) {
+    // size-gated driver tiny path ([[SpearmanDriverMaxRows]]); at
+    // 100 TB the distributed two-phase shape is the plan
+    if (!fused) {
       val keyed = df.select(cols.map(c => ix(c).as(s"_v_$c")): _*)
-      if (keyed.count() <= driverMax) {
-        val d = spearmanDriver(df.sparkSession, keyed, cols)
-        if (d.isDefined) return d.get
-      }
+      val local = spearmanDriver(df.sparkSession, keyed, cols)
+      if (local.isDefined) return local.get
     }
     val ranked = if (fused) spearmanRanksFused(df, cols, ix)
                  else spearmanRanksPerColumn(df, cols, ix)
     spearmanMoments(ranked, cols)
   }
 
+  /** Row gate of [[spearmanDriver]]: at gate size the per-column shape
+    * is ~15 tiny scheduled jobs around microseconds of integer rank
+    * arithmetic. 1M keyed rows is ≈24 MB of longs (the graph-gate
+    * collect bound) and keeps the twin's Long moment sums exact:
+    * Σr² ≤ 4n³ < 2⁶³ at n ≤ 1M. */
+  private val SpearmanDriverMaxRows = 1000000L
+
   /** Driver twin of the per-column rank pipeline + moment tail: exact
     * doubled average ranks (2r̄ = 2·prefix − cnt + 1 over each sorted
-    * value array), Long moment sums (overflow-safe by the caller's
-    * gate), BigInt cov/var products mirroring the DECIMAL(38,0)
-    * arithmetic, and the same double-divide + round(…, 6) tail
-    * (Spark's Round on double is BigDecimal(d).setScale(6, HALF_UP)
-    * with NaN/Infinity passed through — mirrored verbatim). Returns
-    * None when any keyed value is NULL: the distributed inner rank
+    * value array), Long moment sums (overflow-safe by the gate),
+    * BigInt cov/var products mirroring the DECIMAL(38,0) arithmetic,
+    * and the same double-divide + round(…, 6) tail (Spark's Round on
+    * double is BigDecimal(d).setScale(6, HALF_UP) with NaN/Infinity
+    * passed through — mirrored verbatim). Returns None over the gate
+    * and when any keyed value is NULL: the distributed inner rank
     * joins drop those rows, and the driver twin stays out of that
     * semantics instead of duplicating it. */
   private def spearmanDriver(spark: org.apache.spark.sql.SparkSession,
                              keyed: DataFrame, cols: Seq[String]): Option[DataFrame] = {
+    if (!LocalGate.fits(keyed, SpearmanDriverMaxRows, "spearman")) return None
     val rows = keyed.collect()
     val m = rows.length
     if (m == 0) return None // distributed emits NULL moments on empty input

@@ -256,6 +256,10 @@ object Relational {
         round(col("cum").cast("double"), 2).as("cum_revenue"))
   }
 
+  /** Row gate of [[prefixSum]]'s tiny path: its single-partition
+    * window runs in one task, so the gate keeps that task grid-sized. */
+  private val PrefixSumTinyMaxRows = 10000L
+
   /** Distributed exact prefix sum of an integral column over a total
     * order — the running-sum primitive behind sweep lines
     * ([[graft.ops.EventAnalytics.peakConcurrency]]), Pareto/ABC
@@ -274,15 +278,15 @@ object Relational {
     * The result is checkpointed: each row carries `out` =
     * Σ valCol over all rows ≤ it in the order, current row included.
     *
-    * Tiny inputs (≤ `spark.graft.prefixSum.tinyMaxRows`, default 10k
-    * — value GRIDS, not data: spearman's rounded-quantity grid is 50
-    * rows, the discount grid 11) skip the whole range machinery: the
-    * big path costs ~4 scheduled jobs per call (range sampling,
-    * subtotal collect, output checkpoint — each executing the input
-    * once more), which on a grid-sized input is pure scheduling (the
+    * Tiny inputs (≤ [[PrefixSumTinyMaxRows]] — value GRIDS, not data:
+    * spearman's rounded-quantity grid is 50 rows, the discount grid 11)
+    * skip the whole range machinery: the big path costs ~4 scheduled
+    * jobs per call (range sampling, subtotal collect, output
+    * checkpoint — each executing the input once more), which on a
+    * grid-sized input is pure scheduling (the
     * r15 spearman probe: 3 prefixSums ≈ half the row's fixed
-    * overhead). The tiny path checkpoints the input once, counts it
-    * (cheap on the checkpoint), and returns a LAZY single-partition
+    * overhead). The tiny path checkpoints the input once, probes its
+    * size (cheap on the checkpoint), and returns a LAZY single-partition
     * bounded window — gate-sized by construction, zero further jobs,
     * and the identical exact integer prefix. */
   def prefixSum(df: DataFrame, orderCols: Seq[Column], valCol: String,
@@ -291,14 +295,10 @@ object Relational {
     require(!df.columns.contains(out) && !df.columns.contains("_pid"),
       s"prefixSum: input already carries '$out' or '_pid'")
     val spark = df.sparkSession
-    val tinyMax = spark.conf
-      .getOption("spark.graft.prefixSum.tinyMaxRows").map(_.toLong)
-      .getOrElse(10000L)
-    // one materialization either way: the big path's range sampling and
-    // subtotal collect would re-execute the input; the tiny probe
-    // needs its count
+    // one materialization either way: the big path's range sampling,
+    // subtotal collect and the tiny probe would each re-execute the input
     val in = df.localCheckpoint()
-    if (in.count() <= tinyMax) {
+    if (LocalGate.fits(in, PrefixSumTinyMaxRows, "prefixSum")) {
       // pmod(…, 1) = constant partition key: the repo's bounded
       // single-partition window idiom (no "no partition" plan warning)
       val wAll = Window.partitionBy(pmod(col(valCol).cast("long"), lit(1)))

@@ -97,11 +97,10 @@ class EventAnalyticsSpec extends SparkSpec {
     val ev = events(rows: _*)
     val driver = EventAnalytics.markovAttribution(ev).collect()
       .map(_.toString).sorted.toSeq
-    spark.conf.set("spark.graft.markov.driverStepsMaxMatrixRows", "0")
-    val dist =
-      try EventAnalytics.markovAttribution(ev).collect()
+    val dist = LocalGate.declining("markov") {
+      EventAnalytics.markovAttribution(ev).collect()
         .map(_.toString).sorted.toSeq
-      finally spark.conf.unset("spark.graft.markov.driverStepsMaxMatrixRows")
+    }
     assert(driver.nonEmpty && driver == dist,
       s"driver:\n${driver.mkString("\n")}\ndist:\n${dist.mkString("\n")}")
   }

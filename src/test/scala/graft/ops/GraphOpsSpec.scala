@@ -71,8 +71,7 @@ class GraphOpsSpec extends SparkSpec {
     // force distributed rounds: the mode-vs-argmax A/B is about the
     // DISTRIBUTED aggregate shapes, which the r15 driver gate would
     // otherwise bypass on these tiny graphs
-    spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
-    try {
+    LocalGate.declining("graph") {
       for (g <- Seq(star, bridged); it <- Seq(1, 3)) {
         val base = rowSet(GraphOps.labelPropagation(g, iters = it))
         spark.conf.set("spark.graft.lpa.modeAgg", "true")
@@ -80,7 +79,7 @@ class GraphOpsSpec extends SparkSpec {
           s"mode face diverged at iters=$it")
         finally spark.conf.unset("spark.graft.lpa.modeAgg")
       }
-    } finally spark.conf.unset("spark.graft.graph.driverMaxEdges")
+    }
   }
 
   test("heavy-degree chunked closure returns identical triangle counts and truss trajectories") {
@@ -94,8 +93,7 @@ class GraphOpsSpec extends SparkSpec {
     // force the distributed peel: the chunked-closure A/B pins the
     // DISTRIBUTED triple enumeration, which the r15 driver gate would
     // otherwise bypass on this tiny graph
-    spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
-    try {
+    LocalGate.declining("graph") {
       val base = rowSet(GraphOps.triangleStats(df))
       val baseT = rowSet(GraphOps.ktrussPeel(df, k = 4, rounds = 2))
       spark.conf.set("spark.graft.graph.heavySplitDegree", "4")
@@ -105,7 +103,7 @@ class GraphOpsSpec extends SparkSpec {
         assert(rowSet(GraphOps.ktrussPeel(df, k = 4, rounds = 2)) == baseT,
           "chunked triple enumeration must explode each triangle exactly once")
       } finally spark.conf.unset("spark.graft.graph.heavySplitDegree")
-    } finally spark.conf.unset("spark.graft.graph.driverMaxEdges")
+    }
   }
 
   test("one shared GraphFace serves every operator with results identical to one-shot entries") {
@@ -252,8 +250,7 @@ class GraphOpsSpec extends SparkSpec {
     // shuffle ROUND shapes against each other, which the r15 driver
     // gate would otherwise bypass on these tiny graphs (driver ==
     // distributed is pinned separately by the driver-peel parity test)
-    spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
-    try {
+    LocalGate.declining("graph") {
     // two bridged triangles, a star, and a 60-node pseudo-random graph;
     // every iters in 1..5 (frontier kicks in from round 2; the random
     // graph stabilizes mid-way, exercising the converged early-exit)
@@ -290,7 +287,7 @@ class GraphOpsSpec extends SparkSpec {
         s"broadcast and shuffle dense rounds must agree, graph of ${g.size} edges, iters=$iters")
       assert(adaptive == dense, s"adaptive default, graph of ${g.size} edges, iters=$iters")
     }
-    } finally spark.conf.unset("spark.graft.graph.driverMaxEdges")
+    }
   }
 
   test("driver peels == distributed peels: k-core and k-truss trajectories, hand and pseudo-random graphs") {
@@ -307,11 +304,7 @@ class GraphOpsSpec extends SparkSpec {
     } yield (a, b)).toSeq
     for (g <- Seq(k4tail.toSeq, rnd)) {
       val edges = g.toDF("src", "dst")
-      def distributed[T](body: => T): T = {
-        spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
-        try body
-        finally spark.conf.unset("spark.graft.graph.driverMaxEdges")
-      }
+      def distributed[T](body: => T): T = LocalGate.declining("graph")(body)
       for (k <- Seq(2, 3, 5); rounds <- Seq(1, 3)) {
         val drv = rowSet(GraphOps.kcorePeel(edges, k = k, rounds = rounds))
         val dst = distributed(rowSet(GraphOps.kcorePeel(edges, k = k, rounds = rounds)))
@@ -348,11 +341,7 @@ class GraphOpsSpec extends SparkSpec {
 
   test("driver-gate guards: string ids stay distributed, triangle cap falls back, NULL seeds stay inert") {
     import spark.implicits._
-    def distributed[T](body: => T): T = {
-      spark.conf.set("spark.graft.graph.driverMaxEdges", "0")
-      try body
-      finally spark.conf.unset("spark.graft.graph.driverMaxEdges")
-    }
+    def distributed[T](body: => T): T = LocalGate.declining("graph")(body)
     // 1. non-integral node ids: the driver twins cast ids to long, so a
     //    string-id graph under the default edge gate must take the
     //    type-generic distributed path and keep distinct nodes distinct
@@ -375,10 +364,8 @@ class GraphOpsSpec extends SparkSpec {
     val k5tail = (for (a <- 1L to 5L; b <- 1L to 5L if a < b) yield (a, b)) :+ (5L, 9L)
     val k5df = k5tail.toDF("src", "dst")
     val uncapped = rowSet(GraphOps.ktrussPeel(k5df, k = 4, rounds = 3))
-    spark.conf.set("spark.graft.graph.driverMaxTriangles", "2")
-    try assert(rowSet(GraphOps.ktrussPeel(k5df, k = 4, rounds = 3)) == uncapped,
+    assert(rowSet(GraphOps.ktrussPeel(GraphOps.face(k5df), 4, 3, maxTriangles = 2)) == uncapped,
       "capped driver enumeration must fall back to an identical distributed peel")
-    finally spark.conf.unset("spark.graft.graph.driverMaxTriangles")
     assert(uncapped == distributed(rowSet(GraphOps.ktrussPeel(k5df, k = 4, rounds = 3))))
     // 3. NULL seed: the distributed path keeps one inert (NULL, 0) row
     //    (NULL never equi-joins sym); the driver twin must mirror it

@@ -156,16 +156,12 @@ class PageRankOpSpec extends SparkSpec {
     // force the shuffle layout (every graph over the broadcast ceiling;
     // tiny gate off too, else this graph would retake the driver path)
     spark.conf.set("spark.graft.pagerank.broadcastNodesMax", "0")
-    spark.conf.set("spark.graft.pagerank.tinyGraphMaxNodes", "0")
-    try {
+    try LocalGate.declining("pagerank") {
       assert(PageRankOp.pageRank(df, "src", "dst", 3)
         .as[(Long, Long)].collect().toMap == basePr)
       assert(PageRankOp.personalizedPageRank(df, "src", "dst", seeds, 3)
         .as[(Long, Long)].collect().toMap == basePpr)
-    } finally {
-      spark.conf.unset("spark.graft.pagerank.broadcastNodesMax")
-      spark.conf.unset("spark.graft.pagerank.tinyGraphMaxNodes")
-    }
+    } finally spark.conf.unset("spark.graft.pagerank.broadcastNodesMax")
   }
 
   test("tiny driver path equals the distributed rounds integer-for-integer") {
@@ -177,13 +173,12 @@ class PageRankOpSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     val tinyPpr = PageRankOp.personalizedPageRank(df, "src", "dst", seeds, 3)
       .as[(Long, Long)].collect().toMap
-    spark.conf.set("spark.graft.pagerank.tinyGraphMaxNodes", "0")
-    try {
+    LocalGate.declining("pagerank") {
       assert(PageRankOp.pageRank(df, "src", "dst", 3)
         .as[(Long, Long)].collect().toMap == tinyPr)
       assert(PageRankOp.personalizedPageRank(df, "src", "dst", seeds, 3)
         .as[(Long, Long)].collect().toMap == tinyPpr)
-    } finally spark.conf.unset("spark.graft.pagerank.tinyGraphMaxNodes")
+    }
   }
 
   test("PreparedGraph: prepared == direct integer-for-integer (pageRank + PPR), repeated calls included") {
@@ -194,8 +189,8 @@ class PageRankOpSpec extends SparkSpec {
     val directPpr = PageRankOp.personalizedPageRank(df, "src", "dst", seeds, 3)
       .as[(Long, Long)].collect().toMap
     for (forceEngine <- Seq(false, true)) {
-      if (forceEngine) spark.conf.set("spark.graft.pagerank.tinyGraphMaxNodes", "0")
-      try {
+      val declined = if (forceEngine) Seq("pagerank") else Nil
+      LocalGate.declining(declined: _*) {
         val pg = PageRankOp.prepare(df, "src", "dst")
         // two calls each: the shared handle must serve repeat queries
         for (_ <- 1 to 2) {
@@ -204,7 +199,7 @@ class PageRankOpSpec extends SparkSpec {
           assert(PageRankOp.personalizedPageRank(pg, seeds, 3)
             .as[(Long, Long)].collect().toMap == directPpr, s"engine=$forceEngine")
         }
-      } finally if (forceEngine) spark.conf.unset("spark.graft.pagerank.tinyGraphMaxNodes")
+      }
     }
   }
 
@@ -212,7 +207,6 @@ class PageRankOpSpec extends SparkSpec {
     val df = graph.toDF("src", "dst")
     // the spec graph is tiny — disable the driver path so the round
     // engine's plans are what the listener captures
-    spark.conf.set("spark.graft.pagerank.tinyGraphMaxNodes", "0")
     val plans = scala.collection.mutable.ArrayBuffer.empty[String]
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -236,7 +230,7 @@ class PageRankOpSpec extends SparkSpec {
       plans.synchronized(
         plans.filter(p => p.contains("rank_u") && p.contains("Join")).toSeq)
     }
-    try {
+    try LocalGate.declining("pagerank") {
       val b = roundPlans(PageRankOp.pageRank(df, "src", "dst", 2))
       assert(b.nonEmpty)
       b.foreach { p =>
@@ -253,9 +247,6 @@ class PageRankOpSpec extends SparkSpec {
         assert(n == 1,
           s"shuffle-path round must ride ONE data-sized exchange (the _dst rollup), saw $n:\n" + p)
       }
-    } finally {
-      spark.conf.unset("spark.graft.pagerank.broadcastNodesMax")
-      spark.conf.unset("spark.graft.pagerank.tinyGraphMaxNodes")
-    }
+    } finally spark.conf.unset("spark.graft.pagerank.broadcastNodesMax")
   }
 }

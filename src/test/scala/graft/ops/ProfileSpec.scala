@@ -97,11 +97,7 @@ class ProfileSpec extends SparkSpec {
 
   test("spearmanMatrix: driver tiny path == distributed per-column bit-for-bit; NULL input falls back") {
     import spark.implicits._
-    def distributed[T](body: => T): T = {
-      spark.conf.set("spark.graft.spearman.driverMaxRows", "0")
-      try body
-      finally spark.conf.unset("spark.graft.spearman.driverMaxRows")
-    }
+    def distributed[T](body: => T): T = LocalGate.declining("spearman")(body)
     // tie-heavy (x, z) plus a near-unique column (y) — the catalog's
     // grid-shape mix — on a fixture large enough for real tied groups
     val rnd = new scala.util.Random(7)
